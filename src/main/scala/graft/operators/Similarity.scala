@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.storage.Lsm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.expressions.Window
@@ -1930,26 +1931,14 @@ object Similarity extends QueryModule {
       k: Int = K_CENTROIDS, nprobe: Int = NPROBE,
       shortlist: Int = PQ_SHORTLIST): Unit = {
     // A rebuild is a FRESH index: wipe all maintenance state first —
-    // the MANIFEST generation pointer, committed deltas/markers, and
-    // historical generation directories. Without this, rebuilding over
-    // a compacted index writes gen-0 tables a gen-N MANIFEST never
-    // references: readCodes keeps serving the stale generation and the
-    // next compaction's GC deletes the fresh rebuild as non-current.
-    locally {
-      val b = java.nio.file.Paths.get(base)
-      if (java.nio.file.Files.exists(b)) {
-        val stale = scala.util.Using.resource(java.nio.file.Files.list(b)) { s =>
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            n == "MANIFEST" || n == "MANIFEST.tmp" || n == "GEOMETRY" ||
-              n == "deltas" || n == "commits" || n.startsWith("codes-g") ||
-              n.startsWith("rcodes-g")
-          }.toList
-        }
-        stale.foreach(graft.streaming.StreamingOps.deleteRecursively)
-      }
-    }
+    // the generation pointer, committed deltas/markers, historical
+    // generation directories, and the build-complete GEOMETRY marker.
+    // Without this, rebuilding over a compacted index writes gen-0
+    // tables a gen-N pointer never references: readCodes keeps serving
+    // the stale generation and the next compaction's GC deletes the
+    // fresh rebuild as non-current.
+    Lsm.reset(base, IndexLayout)
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(base, "GEOMETRY"))
     val en = normalizedFrom(raw).localCheckpoint()
     // The training sample, sized to the cell count — a production
     // deployment builds at ivfGeometry(n)'s (k, nprobe, shortlistAt),
@@ -2076,44 +2065,48 @@ object Similarity extends QueryModule {
         })
       case _ => None
     }
-    // Every write chain settles before anything proceeds (awaitAll's
-    // no-write-in-flight guarantee — the concurrent-write correctness
-    // idiom all three maintenance surfaces share). Awaited BY NAME
-    // (r20 ADVICE): no positional indexing into a mixed sequence.
-    graft.streaming.StreamingOps.awaitAll(
-      Seq[Future[Any]](codesF, centWriteF, booksWriteF) ++
-        rbooksWriteF.toSeq ++ rcodesF.toSeq)
-    // Persist the ROUTING geometry with the index (r19 ADVICE): an
-    // index built at corpus-scaled k served at the fixed NPROBE/
-    // PQ_SHORTLIST silently degrades recall; storing (k, nprobe,
-    // shortlist) makes [[serveFromIndex]]'s defaults the values the
-    // build was sized for. Written AFTER awaitAll (r20 ADVICE) so it
-    // doubles as the build-complete marker: an out-of-process reader
-    // that observes GEOMETRY observes complete model tables.
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(base, "GEOMETRY"), s"$k $nprobe $shortlist")
-    // Fail LOUDLY on an empty code table. Since the r20 exact-fill
-    // init over the rank-re-keyed training slice, an empty codes table
-    // can only mean an empty input corpus — but a silent zero-row
-    // write would still serve nothing and break every later read with
-    // an unhelpful schema-inference error, so the tripwire stays. A
-    // cell-partitioned write of zero rows leaves no data entries at
-    // all, so the check is a free directory listing.
-    def requireNonEmpty(table: String): Unit = {
-      val entries = Option(new java.io.File(s"$base/$table").listFiles())
-        .getOrElse(Array.empty)
-      require(entries.exists(f => f.isDirectory || f.getName.endsWith(".parquet")),
-        s"index build at $base wrote an EMPTY '$table' table — with the " +
-          "exact-fill init this means the input corpus itself was empty; " +
-          "nothing was indexed")
-    }
-    requireNonEmpty("codes")
-    if (withResiduals) requireNonEmpty("rcodes")
     // A rebuild overwrites the gen-0 tables IN PLACE (same generation,
-    // empty pending set) — bump the per-base epoch so the assembled-
-    // read cache cannot serve the pre-rebuild file listing.
-    epochOf(base).incrementAndGet()
+    // empty pending set): the per-base epoch is bumped so the
+    // assembled-read cache cannot serve the pre-rebuild file listing —
+    // in a finally, because a build that fails once its writes have
+    // started has overwritten tables too. awaitAll settles every write
+    // chain before the bump, so no reader caches a half-written listing.
+    try {
+      // Every write chain settles before anything proceeds (awaitAll's
+      // no-write-in-flight guarantee — the concurrent-write correctness
+      // idiom all three maintenance surfaces share). Awaited BY NAME
+      // (r20 ADVICE): no positional indexing into a mixed sequence.
+      graft.streaming.StreamingOps.awaitAll(
+        Seq[Future[Any]](codesF, centWriteF, booksWriteF) ++
+          rbooksWriteF.toSeq ++ rcodesF.toSeq)
+      // Fail LOUDLY on an empty code table. Since the r20 exact-fill
+      // init over the rank-re-keyed training slice, an empty codes
+      // table can only mean an empty input corpus — but a silent
+      // zero-row write would still serve nothing and break every later
+      // read with an unhelpful schema-inference error, so the tripwire
+      // stays. A cell-partitioned write of zero rows leaves no data
+      // entries at all, so the check is a free directory listing.
+      def requireNonEmpty(table: String): Unit = {
+        val entries = Option(new java.io.File(s"$base/$table").listFiles())
+          .getOrElse(Array.empty)
+        require(entries.exists(f => f.isDirectory || f.getName.endsWith(".parquet")),
+          s"index build at $base wrote an EMPTY '$table' table — with the " +
+            "exact-fill init this means the input corpus itself was empty; " +
+            "nothing was indexed")
+      }
+      requireNonEmpty("codes")
+      if (withResiduals) requireNonEmpty("rcodes")
+      // Persist the ROUTING geometry with the index (r19 ADVICE): an
+      // index built at corpus-scaled k served at the fixed NPROBE/
+      // PQ_SHORTLIST silently degrades recall; storing (k, nprobe,
+      // shortlist) makes [[serveFromIndex]]'s defaults the values the
+      // build was sized for. Written LAST, after every write settled
+      // and the tables passed the empty check, so it doubles as the
+      // build-complete marker: an out-of-process reader that observes
+      // GEOMETRY observes complete, non-empty model tables.
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(base, "GEOMETRY"), s"$k $nprobe $shortlist")
+    } finally epochOf(base).incrementAndGet()
     // Under-fill tripwire (r17 advice): the empty-table check above
     // catches an init that matched NOTHING, but a quantizer can still
     // end up smaller than its contract — a training sample smaller
@@ -2260,6 +2253,46 @@ object Similarity extends QueryModule {
       .join(resid.select(col("vec_id"), col("cell")), "vec_id")
   }
 
+  /** The index's [[Lsm]] layout: deltas from id 1, each owning
+    * `deltas/<k>/` (codes, rcodes and tombstones tables inside), the
+    * build's own `codes`/`rcodes` as generation 0, both code families
+    * folding. Writers serialize on [[Lsm.locked]]: two concurrent
+    * upserts into one base would claim the same delta id and clobber
+    * each other's staging — a maintenance loop is single-writer by
+    * nature, and the lock makes that true within a JVM rather than
+    * assumed. */
+  private val IndexLayout = Lsm.Layout(firstId = 1, folds = Seq("codes", "rcodes"),
+    delta = (t, k) => s"deltas/$k/$t", baseGen = true,
+    deltaDir = Some((k: Long) => s"deltas/$k"))
+
+  private def deltaAt(base: String, table: String, k: Long): String =
+    s"$base/${IndexLayout.delta(table, k)}"
+
+  /** Whether the index stores `table` at all: its codebooks are the
+    * build's record of it (an index built `withResiduals = false` has
+    * no rcodebooks and never writes rcodes). */
+  private def hasTable(base: String, table: String): Boolean =
+    java.nio.file.Files.exists(java.nio.file.Paths.get(base,
+      if (table == "rcodes") "rcodebooks" else "codebooks"))
+
+  /** LSM L0 auto-compaction threshold for the index delta log — the
+    * streaming accumulators' round-19 resume policy applied to the
+    * maintenance ops: every read unions one clustered table per
+    * committed-unfolded delta, so a loop that never compacts degrades
+    * without bound. Once at least this many deltas sit unfolded, the
+    * maintenance op that just committed folds them (it already holds
+    * the base's single-writer lock). Compaction is read-invisible
+    * (the spec-pinned `ann_index_compact` contract) and mirror-safe
+    * (it folds layout, not the id set); ≤ 0 disables — fully
+    * caller-driven, the pre-round-19 posture. The comparison is
+    * `>=`: threshold = 1 folds after every commit. */
+  val AUTO_COMPACT_DELTAS = 64
+
+  private[graft] def maybeAutoCompact(spark: SparkSession, base: String,
+      threshold: Int = AUTO_COMPACT_DELTAS): Unit =
+    if (threshold > 0 && Lsm.state(base, IndexLayout).pending.size >= threshold)
+      annIndexCompact(spark, base)
+
   /** Incremental index maintenance — the production answer to "new
     * vectors arrived" that does NOT retrain: assign each new vector to
     * its nearest FROZEN centroid, encode it with the FROZEN per-subspace
@@ -2279,44 +2312,6 @@ object Similarity extends QueryModule {
     * shifts — the documented trade of every production IVF system; the
     * rebuild path is the periodic re-train. SimilaritySpec pins
     * append ≡ one-pass frozen encode of the union, bit-for-bit. */
-  /** Per-index-base upsert serialization: two concurrent upserts into
-    * one base would pick the same delta id and clobber each other's
-    * staging — a maintenance loop is single-writer by nature, and the
-    * lock makes that true within a JVM rather than assumed. */
-  private val upsertLocks = scala.collection.concurrent.TrieMap
-    .empty[String, Object]
-
-  /** Delta ids whose commit marker exists — the single source of truth
-    * for what an index read sees beyond the base build (the
-    * [[graft.streaming.StreamNearDedup]] marker protocol applied to
-    * the inverted file). */
-  /** LSM L0 auto-compaction threshold for the index delta log — the
-    * streaming accumulators' round-19 resume policy applied to the
-    * maintenance ops: every read unions one clustered table per
-    * committed-unfolded delta, so a loop that never compacts degrades
-    * without bound. Once at least this many deltas sit unfolded, the
-    * maintenance op that just committed folds them (it already holds
-    * the base's single-writer lock). Compaction is read-invisible
-    * (the spec-pinned `ann_index_compact` contract) and mirror-safe
-    * (it folds layout, not the id set); ≤ 0 disables — fully
-    * caller-driven, the pre-round-19 posture. The comparison is
-    * `>=`: threshold = 1 folds after every commit. */
-  val AUTO_COMPACT_DELTAS = 64
-
-  private[graft] def maybeAutoCompact(spark: SparkSession, base: String,
-      threshold: Int = AUTO_COMPACT_DELTAS): Unit =
-    if (threshold > 0) {
-      val (_, folded) = manifest(base)
-      if (committedDeltas(base).count(_ > folded) >= threshold)
-        annIndexCompact(spark, base)
-    }
-
-  private def committedDeltas(base: String): Seq[Long] = {
-    val dir = new java.io.File(s"$base/commits")
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName.toLongOption).toSeq.sorted
-  }
-
   def annIndexUpsert(spark: SparkSession, indexBase: String,
       raw: DataFrame): Unit = {
     annIndexUpsert(spark, indexBase, raw, knownParts = None)
@@ -2357,7 +2352,7 @@ object Similarity extends QueryModule {
     * layout, not the id set. */
   private[graft] def annIndexUpsert(spark: SparkSession, indexBase: String,
       raw: DataFrame, knownParts: Option[Seq[DataFrame]]): Option[DataFrame] =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
+    Lsm.locked(indexBase) {
       // Known = COMMITTED codes only. A bare parquet append would be
       // the corruption path here: a job-level crash mid-append can
       // leave a vector with a partial code set that a retry's
@@ -2381,17 +2376,16 @@ object Similarity extends QueryModule {
       }).localCheckpoint()
       if (fresh.isEmpty) None
       else {
-        val k = committedDeltas(indexBase).maxOption.getOrElse(0L) + 1
-        val delta = s"$indexBase/deltas/$k"
-        // Clear the WHOLE reused directory, not just the tables this op
-        // writes: a crashed DELETE leaves uncommitted `tombstones`
-        // debris at this id, and mode("overwrite") on `codes` alone
-        // would leave it in place — the marker landed below commits the
-        // whole delta directory, debris included, and stale tombstones
-        // would then mask live codes (the cross-op-type twin of the
-        // partial-codes corruption the marker protocol exists for).
-        clearDelta(delta)
-        writeDelta(encodeWith(spark, indexBase, fresh), s"$delta/codes")
+        // The claim clears the WHOLE reused delta directory, not just
+        // the tables this op writes: a crashed DELETE leaves uncommitted
+        // `tombstones` debris at this id, and mode("overwrite") on
+        // `codes` alone would leave it in place — the marker landed
+        // below commits the whole delta directory, debris included, and
+        // stale tombstones would then mask live codes (the cross-op-type
+        // twin of the partial-codes corruption the marker protocol
+        // exists for).
+        val k = Lsm.claim(indexBase, IndexLayout)
+        writeDelta(encodeWith(spark, indexBase, fresh), deltaAt(indexBase, "codes", k))
         // Both code families stay in lockstep: one marker covers both,
         // so a crash between the two writes leaves NEITHER visible. An
         // index built without residual artifacts (`withResiduals =
@@ -2403,9 +2397,9 @@ object Similarity extends QueryModule {
         // job costs more than re-deriving a maintenance-window-sized
         // batch twice, at fixture scale and at production batch sizes
         // alike. Kept sequential-lazy deliberately.)
-        if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(indexBase, "rcodebooks")))
-          writeDelta(encodeResidWith(spark, indexBase, fresh), s"$delta/rcodes")
+        if (hasTable(indexBase, "rcodes"))
+          writeDelta(encodeResidWith(spark, indexBase, fresh),
+            deltaAt(indexBase, "rcodes", k))
         // The returned fresh-id projection is materialized BEFORE the
         // marker lands (r17 advice): it is the caller's next mirror
         // part, and it is the last Spark job of the append — so every
@@ -2417,10 +2411,7 @@ object Similarity extends QueryModule {
         // fold cycle (previously the mirror re-checkpointed this
         // post-commit — the non-atomic window the advice flagged).
         val freshIds = fresh.select(col("vec_id")).localCheckpoint()
-        val commits = java.nio.file.Paths.get(indexBase, "commits")
-        java.nio.file.Files.createDirectories(commits)
-        try java.nio.file.Files.createFile(commits.resolve(k.toString))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+        Lsm.commit(indexBase, k)
         maybeAutoCompact(spark, indexBase)
         Some(freshIds)
       }
@@ -2446,16 +2437,6 @@ object Similarity extends QueryModule {
     codes.repartition(col("cell")).sortWithinPartitions(col("cell"))
       .write.mode("overwrite").parquet(dest)
 
-  /** Remove an UNCOMMITTED delta directory before its id is reused —
-    * the debris from a crashed attempt of ANY op type. Both writers
-    * call this before staging their payload, so a marker can never
-    * commit another op's leftovers alongside its own tables. */
-  private def clearDelta(delta: String): Unit = {
-    val p = java.nio.file.Paths.get(delta)
-    if (java.nio.file.Files.exists(p))
-      graft.streaming.StreamingOps.deleteRecursively(p)
-  }
-
   /** Delete vectors from the index WITHOUT rewriting any code file —
     * the third LSM maintenance op. Deletes land as a TOMBSTONE delta
     * (`deltas/<k>/tombstones`, one vec_id column) under the same
@@ -2476,24 +2457,20 @@ object Similarity extends QueryModule {
     * delete twin of the upsert's idempotence anti-join. */
   def annIndexDelete(spark: SparkSession, indexBase: String,
       ids: DataFrame): Unit =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
+    Lsm.locked(indexBase) {
       val live = readCodes(spark, indexBase).select(col("vec_id")).distinct()
       val doomed = ids.select(col("vec_id")).distinct()
         .join(live, Seq("vec_id"), "left_semi").localCheckpoint()
       if (!doomed.isEmpty) {
-        val k = committedDeltas(indexBase).maxOption.getOrElse(0L) + 1
-        // Same cross-op-type debris rule as the upsert: a crashed
-        // UPSERT's partial codes at this id must not ride this marker
-        // into visibility.
-        clearDelta(s"$indexBase/deltas/$k")
+        // Same cross-op-type debris rule as the upsert: the claim clears
+        // a crashed UPSERT's partial codes at this id, so they cannot
+        // ride this marker into visibility.
+        val k = Lsm.claim(indexBase, IndexLayout)
         // One file: a tombstone batch is ids only — megabytes at a
         // scale where the codes they mask are terabytes.
         doomed.coalesce(1).write.mode("overwrite")
-          .parquet(s"$indexBase/deltas/$k/tombstones")
-        val commits = java.nio.file.Paths.get(indexBase, "commits")
-        java.nio.file.Files.createDirectories(commits)
-        try java.nio.file.Files.createFile(commits.resolve(k.toString))
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
+          .parquet(deltaAt(indexBase, "tombstones", k))
+        Lsm.commit(indexBase, k)
         maybeAutoCompact(spark, indexBase)
       }
     }
@@ -2554,136 +2531,26 @@ object Similarity extends QueryModule {
     }
   }
 
-  /** The read-back coded corpus (plain `codes` or residual `rcodes`):
-    * the base build unioned with every COMMITTED delta directory —
-    * uncommitted (crashed) upsert debris is invisible by construction.
-    * Each root is read as its own partitioned table (partition
-    * discovery per root; pruning by cell still reaches every scan),
-    * and the partition column comes back with the inferred (int)
-    * partition type, recast to the vec_id-domain long every join
-    * expects. */
-  /** Compaction pointer: `(generation, foldedUpTo)`. Generation g > 0
-    * keeps its code tables at `codes-g<g>`/`rcodes-g<g>` and has the
-    * deltas with id ≤ foldedUpTo folded in; generation 0 (no MANIFEST
-    * file) is the base build's own `codes`/`rcodes` with nothing
-    * folded. The pointer is replaced by ATOMIC_MOVE, so readers see
-    * either the old generation (+ its deltas) or the new one — never a
-    * half-compacted mix. */
-  private def manifest(base: String): (Long, Long) = {
-    val p = java.nio.file.Paths.get(base, "MANIFEST")
-    if (java.nio.file.Files.exists(p)) {
-      // Validated parse: ATOMIC_MOVE makes a torn pointer unlikely on a
-      // POSIX local FS, but the write is not fsynced and object-store
-      // backends lack atomic rename — a corrupt pointer must fail
-      // naming the index and the bytes found, not with a bare
-      // NumberFormatException three frames down.
-      val raw = java.nio.file.Files.readString(p)
-      val parts = raw.trim.split("\\s+")
-      require(parts.length == 2 && parts.forall(_.forall(_.isDigit)),
-        s"corrupt MANIFEST at $base: expected '<generation> <foldedUpTo>', " +
-          s"got ${raw.take(80).trim} — the compaction pointer is unreadable; " +
-          "restore it or delete it to fall back to generation 0")
-      (parts(0).toLong, parts(1).toLong)
-    } else (0L, 0L)
-  }
-
-  private def codesRoot(base: String, table: String, gen: Long): String =
-    if (gen == 0L) s"$base/$table" else s"$base/$table-g$gen"
-
-  /** Fold every committed delta into a new base generation — the LSM
+  /** Fold the committed deltas into a new base generation — the LSM
     * compaction step of the maintenance loop. Without it the read path
     * unions one partitioned table PER COMMITTED DELTA forever: a
     * serving stack appending every few minutes accumulates thousands
     * of roots, and every query pays partition discovery + a scan per
     * root. Compaction restores O(1) read cost while the append path
-    * keeps running: stage the union as `codes-g<gen+1>` (+ rcodes in
-    * lockstep), swap the MANIFEST pointer atomically, then GC the
-    * folded delta payloads and the previous generation.
-    *
-    * Crash-safety is the delta-commit argument one level up: staging
-    * directories are invisible until the pointer swap (a crashed
-    * attempt's debris sits at the gen id the retry deterministically
-    * reuses and mode("overwrite") clobbers), the swap itself is an
-    * ATOMIC_MOVE, and a crash before GC leaves only invisible
-    * garbage a later compaction removes. Folded deltas keep their
-    * commit MARKERS (ids must stay monotonic for the next append);
-    * readCodes skips them via the manifest's foldedUpTo bound.
-    *
-    * GC is DEFERRED one fold: this call reclaims only what the
-    * manifest already stopped referencing before it ran (the previous
-    * fold's generation and folded deltas), never the generation it is
-    * replacing in this call — so a reader that built a plan against
-    * generation N just before the swap keeps its files until the
-    * NEXT compaction, and overlap between one fold and in-flight
-    * serves is safe. The single-writer posture (the per-base lock)
-    * remains required on the write side only. */
+    * keeps running: [[Lsm.fold]] stages the tombstone-masked read of
+    * both code families as `codes-g<gen+1>` / `rcodes-g<gen+1>`
+    * (concurrent job chains), swaps the MANIFEST pointer atomically,
+    * and leaves the folded delta payloads and the replaced generation
+    * to the NEXT compaction's entry sweep — a reader that planned
+    * against generation N just before the swap keeps its files for one
+    * fold. Crash safety, the stop at a gap in the committed ids, and
+    * the single-writer lock are [[Lsm]]'s contract. */
   def annIndexCompact(spark: SparkSession, indexBase: String): Unit =
-    upsertLocks.getOrElseUpdate(indexBase, new Object).synchronized {
-      // Sweep FIRST, from current manifest state alone: everything the
-      // pointer no longer references — folded delta payloads, non-
-      // current generations — is garbage no matter which crashed or
-      // completed attempt left it, so a GC interrupted last time is
-      // finished this time (this is what makes "a later compaction
-      // removes crash debris" true rather than aspirational). Running
-      // the sweep ONLY here, before the fold, is the one-fold grace
-      // period the scaladoc promises in-flight readers.
-      gcInvisible(indexBase)
-      val (gen, folded) = manifest(indexBase)
-      val pending = committedDeltas(indexBase).filter(_ > folded)
-      if (pending.nonEmpty) {
-        val newGen = gen + 1
-        def stage(table: String): Unit =
-          if (new java.io.File(codesRoot(indexBase, table, gen)).exists())
-            readCodes(spark, indexBase, table)
-              .repartition(col("cell"))
-              .write.partitionBy("cell").mode("overwrite")
-              .parquet(codesRoot(indexBase, table, newGen))
-        stage("codes")
-        stage("rcodes")
-        val tmp = java.nio.file.Paths.get(indexBase, "MANIFEST.tmp")
-        java.nio.file.Files.writeString(tmp, s"$newGen ${pending.max}")
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(indexBase, "MANIFEST"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // Visible state is now gen+1 only. What it replaced is NOT
-        // reclaimed here — the next compaction's entry sweep does it,
-        // giving in-flight readers of the old generation a full fold
-        // of grace (see scaladoc).
-      }
+    Lsm.fold(indexBase, IndexLayout) { (table, dest, scope) =>
+      if (hasTable(indexBase, table))
+        codesAt(spark, indexBase, table, scope).repartition(col("cell"))
+          .write.partitionBy("cell").mode("overwrite").parquet(dest)
     }
-
-  /** Delete every code payload the CURRENT manifest does not
-    * reference: delta directories with id ≤ foldedUpTo and code-table
-    * generations other than the live one (including the gen-0 build
-    * tables once a later generation is live). Markers are kept — ids
-    * must stay monotonic across folds. Derived purely from on-disk
-    * pointer state, so it is safe to run at any point the compaction
-    * lock is held and idempotent across crashes. */
-  private def gcInvisible(indexBase: String): Unit = {
-    val (gen, folded) = manifest(indexBase)
-    committedDeltas(indexBase).filter(_ <= folded).foreach { k =>
-      val d = java.nio.file.Paths.get(s"$indexBase/deltas/$k")
-      if (java.nio.file.Files.exists(d))
-        graft.streaming.StreamingOps.deleteRecursively(d)
-    }
-    // Stale generations by DIRECTORY LISTING, not by probing every id
-    // in 0..gen — a long-lived maintenance loop's gen counter grows
-    // forever, and per-fold GC cost must scale with what actually
-    // exists (a handful of live entries), not with the loop's age.
-    val live = Set(codesRoot(indexBase, "codes", gen),
-      codesRoot(indexBase, "rcodes", gen))
-    val b = java.nio.file.Paths.get(indexBase)
-    val stale = scala.util.Using.resource(java.nio.file.Files.list(b)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        (n == "codes" || n == "rcodes" || n.startsWith("codes-g") ||
-          n.startsWith("rcodes-g")) && !live.contains(p.toString)
-      }.toList
-    }
-    stale.foreach(graft.streaming.StreamingOps.deleteRecursively)
-  }
 
   /** The stored codes-table shape — ONE definition shared by the
     * drained-index empty read below and, as the documented anchor, by
@@ -2724,19 +2591,36 @@ object Similarity extends QueryModule {
   private def epochOf(base: String): java.util.concurrent.atomic.AtomicLong =
     buildEpochs.getOrElseUpdate(base, new java.util.concurrent.atomic.AtomicLong)
 
+  /** The read-back coded corpus (plain `codes` or residual `rcodes`):
+    * the base build unioned with every COMMITTED delta directory —
+    * uncommitted (crashed) upsert debris is invisible by construction.
+    * Each root is read as its own partitioned table (partition
+    * discovery per root; pruning by cell still reaches every scan),
+    * and the partition column comes back with the inferred (int)
+    * partition type, recast to the vec_id-domain long every join
+    * expects. */
   private[graft] def readCodes(spark: SparkSession, base: String,
-      table: String = "codes"): DataFrame = {
-    val (gen0, folded0) = manifest(base)
-    val pending0 = committedDeltas(base).filter(_ > folded0)
-    val sig = s"$gen0|${pending0.mkString(",")}|${epochOf(base).get()}"
+      table: String = "codes"): DataFrame =
+    codesAt(spark, base, table, Lsm.state(base, IndexLayout))
+
+  /** [[readCodes]] at one already-read index state: the memo key and
+    * the assembly share the single MANIFEST parse + marker listing, and
+    * a fold reads exactly the deltas it folds. */
+  private def codesAt(spark: SparkSession, base: String, table: String,
+      st: Lsm.State): DataFrame = {
+    val sig = s"${st.gen}|${st.pending.mkString(",")}|${epochOf(base).get()}"
     codesFrameCache.getOrElseUpdate(spark, (base, table, sig))(
-      assembleCodes(spark, base, table))
+      assembleCodes(spark, base, table, st))
   }
 
   private def assembleCodes(spark: SparkSession, base: String,
-      table: String): DataFrame = {
-    val (gen, folded) = manifest(base)
-    val pending = committedDeltas(base).filter(_ > folded)
+      table: String, st: Lsm.State): DataFrame = {
+    // A table the index never had is a misconfigured read; a table it
+    // has but whose live root is gone is corrupt storage, and
+    // [[Lsm.live]] fails on it rather than serving only the deltas.
+    require(hasTable(base, table),
+      s"index at $base has no '$table' table — built withResiduals=false? " +
+        "(the residual serving path needs an index that stored rcodes)")
     // Every root carries its SEQUENCE (generation tables = 0, delta k =
     // k): a tombstone in delta t masks code rows from any strictly
     // earlier sequence, and a later re-upsert (codes at j > t)
@@ -2745,12 +2629,9 @@ object Similarity extends QueryModule {
     // into it predates every pending delta (folded < k for all pending
     // k), tombstones included — compaction bakes their effect in and
     // GC reclaims them.
-    val roots = ((0L, codesRoot(base, table, gen)) +:
-      pending.map(k => (k, s"$base/deltas/$k/$table")))
-      .filter { case (_, p) => new java.io.File(p).exists() }
-    require(roots.nonEmpty,
-      s"index at $base has no '$table' table — built withResiduals=false? " +
-        "(the residual serving path needs an index that stored rcodes)")
+    val roots = Lsm.live(base, IndexLayout, st.gen, table).toSeq.map((0L, _)) ++
+      st.pending.map(k => (k, deltaAt(base, table, k)))
+        .filter { case (_, p) => new java.io.File(p).exists() }
     // Roots with at least one data file. A root can legitimately exist
     // with NONE: deleting every live id and compacting stages a
     // zero-row generation (cell-partitioned writes of zero rows leave
@@ -2789,7 +2670,7 @@ object Similarity extends QueryModule {
           s"the shared codes schema $want; update CODES_SCHEMA and the " +
           "write path together")
     }
-    val tombRoots = pending.map(k => (k, s"$base/deltas/$k/tombstones"))
+    val tombRoots = st.pending.map(k => (k, deltaAt(base, "tombstones", k)))
       .filter { case (_, p) => new java.io.File(p).exists() }
     if (tombRoots.isEmpty) codes.drop("seq")
     else {

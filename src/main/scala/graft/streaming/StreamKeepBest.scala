@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import graft.storage.Lsm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,6 +100,10 @@ object StreamKeepBest {
   def compactBands(spark: SparkSession, stateDir: String): Unit =
     StreamNearDedup.compactState(spark, stateDir,
       Seq("bands" -> emptyBandsPersisted(spark)))
+
+  /** The keep-best state dir's [[Lsm]] layout: bands fold, events never
+    * do (see the compaction boundary above). */
+  private val BandsLayout = StreamNearDedup.stateLayout(Seq("bands"))
 
   /** The one canonical-selection order, shared with the batch
     * keep-best gate: best quality first, doc_id as the tie-break. */
@@ -296,7 +301,7 @@ object StreamKeepBest {
 
     def events: DataFrame = readEvents(spark, stateDir)
 
-    private var committedIds: Set[Long] = StreamNearDedup.readCommitted(stateDir)
+    private var committedIds: Set[Long] = Lsm.committed(stateDir).toSet
     // Deferred auto-compaction at resume behind the same foldEvery
     // knob — the [[StreamNearDedup.PersistentAccumulator]] L0 policy
     // and deferral (r19 item 5 + ADVICE): construction builds the
@@ -325,11 +330,12 @@ object StreamKeepBest {
     private def collapsedMin(bands: DataFrame): DataFrame =
       bands.groupBy(col("band_idx"), col("band_key"))
         .agg(min(col("comp")).as("comp"))
-    @volatile private var bandsBase: DataFrame =
+    private def storedBands(): DataFrame =
       StreamNearDedup.ckptClustered(spark, collapsedMin(
         StreamNearDedup.readState(spark, stateDir, "bands",
-            emptyBandsPersisted(spark))
+            emptyBandsPersisted(spark), Lsm.state(stateDir, BandsLayout))
           .select(col("band_idx"), col("band_key"), col("comp"))))
+    @volatile private var bandsBase: DataFrame = storedBands()
     @volatile private var bandsTail: List[DataFrame] = Nil
     // Canonical mirror as an LSM list too — checkpointed base + one
     // lazy winner-delta scan per committed batch (newest first),
@@ -343,9 +349,7 @@ object StreamKeepBest {
     @volatile private var canonTail: List[DataFrame] = Nil
     private var sinceMemFold = 0
     private var sinceDiskFold =
-      if (foldEvery > 0)
-        committedIds.count(_ > StreamNearDedup.manifest(stateDir)._2)
-      else 0
+      if (foldEvery > 0) Lsm.state(stateDir, BandsLayout).pending.size else 0
 
     /** The foreachBatch body (serial per query; lock defensive).
       *
@@ -434,7 +438,7 @@ object StreamKeepBest {
           }
           StreamingOps.awaitAll(Seq(eventsWriteF, bandWriteF))
           events.unpersist(blocking = false)
-          StreamNearDedup.commit(stateDir, batchId)
+          Lsm.commit(stateDir, batchId)
           // The canonical mirror's delta layer: a lazy scan of the
           // COMMITTED events file (not the released cache above), the
           // same storage-backed posture as before.
@@ -469,10 +473,7 @@ object StreamKeepBest {
         sinceMemFold += 1; sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactBands(spark, stateDir)
-          bandsBase = StreamNearDedup.ckptClustered(spark, collapsedMin(
-            StreamNearDedup.readState(spark, stateDir, "bands",
-                emptyBandsPersisted(spark))
-              .select(col("band_idx"), col("band_key"), col("comp"))))
+          bandsBase = storedBands()
           bandsTail = Nil
           canonBase = resolveLatest(canonTail :+ canonBase).localCheckpoint()
           canonTail = Nil
@@ -494,7 +495,7 @@ object StreamKeepBest {
     * [[StreamNearDedup.readAdmitted]]. */
   private[graft] def readEvents(spark: SparkSession, stateDir: String): DataFrame =
     StreamNearDedup.readPartitioned(spark, s"$stateDir/events",
-      StreamNearDedup.readCommitted(stateDir), emptyEvents(spark))
+      Lsm.committed(stateDir).toSet, emptyEvents(spark))
 
   /** One live paced run against explicit checkpoint + state dirs —
     * restartable exactly like [[StreamNearDedup.runLiveAgainst]]

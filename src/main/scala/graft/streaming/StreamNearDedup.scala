@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import graft.storage.Lsm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -219,7 +220,7 @@ object StreamNearDedup {
     // the running query serves each batch's prior-state probe from an
     // in-memory mirror instead of re-scanning the parquet per trigger
     // (measured +3.5s on the 3-batch paced gate before this).
-    private var committedIds: Set[Long] = readCommitted(stateDir)
+    private var committedIds: Set[Long] = Lsm.committed(stateDir).toSet
     // DEFERRED AUTO-COMPACTION AT RESUME — the LSM L0 policy behind
     // the SAME foldEvery knob (r18 verdict item 6; deferral r19 item 5
     // + ADVICE): a restart over a long uncompacted history builds the
@@ -246,13 +247,14 @@ object StreamNearDedup {
     // see the multi-part [[admitWithKeys]]): the base a band-clustered
     // sorted checkpoint whose per-trigger probe is exchange- and
     // sort-free, the tail the committed deltas since the last fold.
-    @volatile private var stateBase: DataFrame =
+    private def storedBase(): DataFrame =
       ckptClustered(spark, readState(spark, stateDir, "bands")
         .select(col("band_idx"), col("band_key")))
+    @volatile private var stateBase: DataFrame = storedBase()
     @volatile private var stateTail: List[DataFrame] = Nil
     private var sinceMemFold = 0
     private var sinceDiskFold =
-      if (foldEvery > 0) committedIds.count(_ > manifest(stateDir)._2) else 0
+      if (foldEvery > 0) Lsm.state(stateDir, StateLayout).pending.size else 0
 
     /** The foreachBatch body (serial per query; lock defensive).
       * Write-once/read-back: the band-delta write is the one execution
@@ -318,7 +320,7 @@ object StreamNearDedup {
                 .mode("overwrite")
                 .parquet(s"$stateDir/admitted/batch_id=$batchId"))))
           }
-          commit(stateDir, batchId)
+          Lsm.commit(stateDir, batchId)
         } finally {
           keys.unpersist(blocking = false)
           if (spreadBatches) batch.unpersist(blocking = false)
@@ -339,9 +341,7 @@ object StreamNearDedup {
         sinceMemFold += 1; sinceDiskFold += 1
         if (foldEvery > 0 && sinceDiskFold >= foldEvery) {
           compactState(spark, stateDir)
-          stateBase = ckptClustered(spark,
-            readState(spark, stateDir, "bands")
-              .select(col("band_idx"), col("band_key")))
+          stateBase = storedBase()
           stateTail = Nil
           sinceDiskFold = 0; sinceMemFold = 0
         } else if (sinceMemFold >= MEM_FOLD_EVERY) {
@@ -384,29 +384,6 @@ object StreamNearDedup {
       if (f.isFile) f.length
       else Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
     walk(new java.io.File(path))
-  }
-
-  /** Stored bytes of a state dir's LIVE band table — the resume-time
-    * seed of the accumulators' running band-size counter. Counts the
-    * current generation base (per the MANIFEST) plus only UNFOLDED
-    * per-batch deltas: the deferred one-fold GC keeps the previous
-    * generation and the just-folded batch dirs on disk, and counting
-    * that debris tripled the size right after a fold — tripping the
-    * ckptProbe regime (RUN_CLUSTER_BYTES) while the real state still
-    * broadcast. */
-  private[streaming] def bandTableBytes(stateDir: String): Long = {
-    val (gen, foldedUpTo) = manifest(stateDir)
-    val base = if (gen > 0) dirBytes(s"$stateDir/bands-g$gen") else 0L
-    val deltas =
-      Option(new java.io.File(s"$stateDir/bands").listFiles())
-        .getOrElse(Array.empty)
-        .filter { d =>
-          val n = d.getName
-          n.startsWith("batch_id=") &&
-            n.stripPrefix("batch_id=").toLongOption.exists(_ > foldedUpTo)
-        }
-        .map(d => dirBytes(d.toString)).sum
-    base + deltas
   }
 
   /** Broadcast-regime bound for a tail delta: below it the lazy scan's
@@ -458,30 +435,15 @@ object StreamNearDedup {
 
   // --- state compaction: fold per-batch dirs into a generation base ------
 
-  /** Compaction pointer for a state dir: `(generation, foldedUpTo)`.
-    * Generation g > 0 keeps its folded tables at `bands-g<g>` /
-    * `admitted-g<g>` and covers every batch id ≤ foldedUpTo;
-    * generation 0 (no MANIFEST) is the plain per-batch layout with
-    * nothing folded. Replaced by ATOMIC_MOVE — readers see the old
-    * generation (+ its per-batch dirs) or the new one, never a
-    * half-fold (same pointer discipline as the ANN index's
-    * [[graft.operators.Similarity]] MANIFEST). */
-  private[graft] def manifest(stateDir: String): (Long, Long) = {
-    val p = java.nio.file.Paths.get(stateDir, "MANIFEST")
-    if (java.nio.file.Files.exists(p)) {
-      val raw = java.nio.file.Files.readString(p)
-      val parts = raw.trim.split("\\s+")
-      require(parts.length == 2 && parts.forall(_.forall(_.isDigit)),
-        s"corrupt MANIFEST at $stateDir: expected '<generation> <foldedUpTo>', " +
-          s"got '${raw.take(80).trim}' — restore or delete it to fall back " +
-          "to the per-batch layout")
-      (parts(0).toLong, parts(1).toLong)
-    } else (0L, -1L) // batch ids start at 0: -1 = nothing folded, so the
-                     // contiguity walk below must see batch 0's marker too
-  }
+  /** The [[Lsm]] layout of a streaming state dir folding `folds`: batch
+    * ids from 0, batch `k` of table `t` at `t/batch_id=k` (a discovered
+    * partition), folded generations at `t-g<g>` and no base build — so
+    * generation 0 is the plain per-batch layout with nothing folded.
+    * [[StreamKeepBest]] folds its bands only. */
+  private[streaming] def stateLayout(folds: Seq[String]): Lsm.Layout =
+    Lsm.Layout(firstId = 0, folds, (t, k) => s"$t/batch_id=$k")
 
-  private def genRoot(stateDir: String, table: String, gen: Long): String =
-    s"$stateDir/$table-g$gen"
+  private val StateLayout = stateLayout(Seq("bands", "admitted"))
 
   /** Schema-complete empty frame for one near-dedup state table (the
     * per-batch read's fallback when every committed dir wrote zero
@@ -498,169 +460,70 @@ object StreamNearDedup {
   }
 
   /** This accumulator's foldable tables, paired with their empties —
-    * the default argument of [[compactState]]/[[readState]]'s callers
-    * here; [[StreamKeepBest]] passes its own (bands only — its event
-    * log is output, never folded). */
+    * the default argument of [[compactState]]; [[StreamKeepBest]]
+    * passes its own (bands only — its event log is output, never
+    * folded). */
   private def ownTables(spark: SparkSession): Seq[(String, DataFrame)] =
     Seq("bands" -> emptyTable(spark, "bands"),
       "admitted" -> emptyTable(spark, "admitted"))
 
-  /** Visible state of one table: the current generation's folded base
-    * (if any) unioned with the committed per-batch dirs the fold does
-    * not cover. This is what [[PersistentAccumulator]] restarts from
-    * and what [[readAdmitted]] serves — so compaction is output-
-    * invariant by construction and the paced gate's oracle is
-    * unchanged by a fold. `empty` must carry the persisted shape
-    * (batch_id included). */
+  /** Visible state of one table at state `st`: the live generation's
+    * folded base (if any) unioned with the committed per-batch dirs the
+    * fold does not cover. This is what [[PersistentAccumulator]]
+    * restarts from and what [[readAdmitted]] serves — so compaction is
+    * output-invariant by construction and the paced gate's oracle is
+    * unchanged by a fold. A generation the MANIFEST names but the disk
+    * lacks fails loudly ([[Lsm.live]]): silently returning only the
+    * unfolded tail would drop every folded row, and the state would
+    * quietly resume near-empty and re-admit near-duplicates. `empty`
+    * must carry the persisted shape (batch_id included). */
   private[streaming] def readState(spark: SparkSession, stateDir: String,
-      table: String, empty: => DataFrame): DataFrame = {
-    val (gen, folded) = manifest(stateDir)
-    val committed = readCommitted(stateDir)
-    val fresh = readPartitioned(spark, s"$stateDir/$table",
-      committed.filter(_ > folded), empty)
-    val baseDir = genRoot(stateDir, table, gen)
-    if (gen == 0L) fresh
-    else {
-      // Fail LOUDLY when the manifest names a generation whose base is
-      // gone (r15 advice): silently returning only the unfolded tail
-      // would drop every folded row — the state would quietly resume
-      // near-empty and re-admit near-duplicates downstream.
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(baseDir)),
-        s"state MANIFEST at $stateDir names generation $gen but its base " +
-          s"$baseDir is missing — state storage is corrupt; restore the " +
-          "base or delete the MANIFEST to fall back to per-batch layout")
-      spark.read.parquet(baseDir).unionByName(fresh)
-    }
+      table: String, empty: => DataFrame, st: Lsm.State): DataFrame = {
+    val fresh = readPartitioned(spark, s"$stateDir/$table", st.pending.toSet, empty)
+    Lsm.live(stateDir, StateLayout, st.gen, table)
+      .fold(fresh)(spark.read.parquet(_).unionByName(fresh))
   }
 
   private[streaming] def readState(spark: SparkSession, stateDir: String,
       table: String): DataFrame =
-    readState(spark, stateDir, table, emptyTable(spark, table))
-
-  private val compactLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
+    readState(spark, stateDir, table, emptyTable(spark, table),
+      Lsm.state(stateDir, StateLayout))
 
   /** Fold the committed per-batch state dirs into a new generation
-    * base — the LSM compaction step of a long-lived ingest. Without it
-    * a restarted query unions one partitioned table PER COMMITTED
-    * BATCH: an ingest triggering every few minutes accumulates
-    * thousands of directories, and every restart pays listing + a scan
-    * per batch. After a fold, restart cost is O(state): one base
-    * table plus the unfolded tail.
+    * base — the LSM compaction step of a long-lived ingest
+    * ([[Lsm.fold]]). Without it a restarted query unions one
+    * partitioned table PER COMMITTED BATCH: an ingest triggering every
+    * few minutes accumulates thousands of directories, and every
+    * restart pays listing + a scan per batch. After a fold, restart
+    * cost is O(state): one base table plus the unfolded tail.
     *
     * Only the CONTIGUOUS committed prefix is folded: a batch that
     * crashed after its data write but before its marker will be
     * REPLAYED by the engine — if its id were folded past, the replay's
-    * rows would be invisible (id ≤ foldedUpTo but absent from the
-    * base). Bounding the fold at the first gap makes that impossible;
-    * in practice foreachBatch is serial so the committed set is a
-    * prefix and everything folds.
-    *
-    * Crash-safety mirrors [[graft.operators.Similarity.annIndexCompact]]:
-    * staged `-g<gen+1>` dirs are invisible until the ATOMIC_MOVE
-    * pointer swap (a crashed attempt's debris is clobbered by the
-    * retry's overwrite and swept by the entry GC); folded per-batch
-    * payloads and the previous generation are reclaimed by the NEXT
-    * fold's entry sweep, giving in-flight readers one fold of grace.
-    * Commit MARKERS are kept — the replay skip-check and batch-id
-    * monotonicity rest on them. Single-writer: call while no query is
-    * writing this state dir (between AvailableNow runs — the spec's
-    * stop/compact/resume sequence is the intended shape).
+    * rows would be invisible. In practice foreachBatch is serial, so
+    * the committed set is a prefix and everything folds. Commit
+    * markers are kept — the replay skip-check rests on them.
+    * Single-writer: call while no query is writing this state dir
+    * (between AvailableNow runs — the spec's stop/compact/resume
+    * sequence is the intended shape).
     *
     * `tables` parameterizes WHICH per-batch tables fold (name + its
     * schema-complete empty): this accumulator folds bands+admitted;
     * [[StreamKeepBest]] folds bands only, leaving its event log — the
     * job's output — in the per-batch layout, which stays correct
     * because unfolded tables are read via [[readPartitioned]] over ALL
-    * committed ids, ignoring the manifest. */
+    * committed ids, ignoring the manifest, and the fold's sweep never
+    * touches a table outside its fold set. */
   def compactState(spark: SparkSession, stateDir: String): Unit =
     compactState(spark, stateDir, ownTables(spark))
 
   def compactState(spark: SparkSession, stateDir: String,
-      tables: Seq[(String, DataFrame)]): Unit =
-    compactLocks.getOrElseUpdate(stateDir, new Object).synchronized {
-      gcInvisible(stateDir, tables.map(_._1))
-      val (gen, folded) = manifest(stateDir)
-      val committed = readCommitted(stateDir)
-      // Largest id with every id in (folded, id] committed.
-      var upTo = folded
-      while (committed(upTo + 1)) upTo += 1
-      if (upTo > folded) {
-        val newGen = gen + 1
-        // Independent reads, disjoint destination dirs — fold the
-        // tables as concurrent job chains (the delta-write posture);
-        // the MANIFEST swap below still lands only after ALL of them.
-        locally {
-          import scala.concurrent.ExecutionContext.Implicits.global
-          StreamingOps.awaitAll(tables.map { case (table, empty) =>
-            scala.concurrent.Future(
-              readState(spark, stateDir, table, empty).write
-                .mode("overwrite").parquet(genRoot(stateDir, table, newGen)))
-          })
-        }
-        val tmp = java.nio.file.Paths.get(stateDir, "MANIFEST.tmp")
-        java.nio.file.Files.writeString(tmp, s"$newGen $upTo")
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(stateDir, "MANIFEST"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
+      tables: Seq[(String, DataFrame)]): Unit = {
+    val empties = tables.toMap
+    Lsm.fold(stateDir, stateLayout(tables.map(_._1))) { (table, dest, scope) =>
+      readState(spark, stateDir, table, empties(table), scope)
+        .write.mode("overwrite").parquet(dest)
     }
-
-  /** Reclaim everything the current MANIFEST no longer references:
-    * per-batch dirs with id ≤ foldedUpTo and generation dirs other
-    * than the live one. Pure on-disk-pointer logic — idempotent, and
-    * a GC interrupted by a crash is finished by the next fold. */
-  private def gcInvisible(stateDir: String, tables: Seq[String]): Unit = {
-    val (gen, folded) = manifest(stateDir)
-    tables.foreach { table =>
-      readCommitted(stateDir).filter(_ <= folded).foreach { k =>
-        val d = java.nio.file.Paths.get(s"$stateDir/$table/batch_id=$k")
-        if (java.nio.file.Files.exists(d)) StreamingOps.deleteRecursively(d)
-      }
-      // Live-base identity by FILE NAME, not raw string equality of a
-      // concatenated path vs a normalized java.nio Path (r15 advice: a
-      // trailing slash in a caller-supplied stateDir made the two
-      // strings differ and the sweep deleted the LIVE base).
-      val liveName = s"$table-g$gen"
-      val root = java.nio.file.Paths.get(stateDir)
-      val stale = scala.util.Using.resource(java.nio.file.Files.list(root)) { s =>
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter { p =>
-          p.getFileName.toString.startsWith(s"$table-g") &&
-            p.getFileName.toString != liveName
-        }.toList
-      }
-      stale.foreach(StreamingOps.deleteRecursively)
-    }
-  }
-
-  /** Batch ids whose commit marker exists — the single source of truth
-    * for what is visible. */
-  private[streaming] def readCommitted(stateDir: String): Set[Long] = {
-    val dir = java.nio.file.Paths.get(stateDir, "commits")
-    if (!java.nio.file.Files.exists(dir)) Set.empty
-    else scala.util.Using.resource(java.nio.file.Files.list(dir)) { s =>
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .flatMap(p => p.getFileName.toString.toLongOption).toSet
-    }
-  }
-
-  /** Land batch `batchId`'s marker — an empty file whose NAME is the
-    * record (the same shape Spark's own file-sink metadata log uses);
-    * `createFile` is atomic on local/HDFS semantics. Idempotent via
-    * the caller's skip check; a leftover marker can only exist if the
-    * batch fully committed — so a marker already present on a
-    * SAME-INSTANCE replay (a failure after commit() but before the
-    * in-memory bookkeeping updated, e.g. a localCheckpoint error) is
-    * treated as already-committed rather than crashing the replay
-    * permanently with FileAlreadyExistsException. */
-  private[streaming] def commit(stateDir: String, batchId: Long): Unit = {
-    val dir = java.nio.file.Paths.get(stateDir, "commits")
-    java.nio.file.Files.createDirectories(dir)
-    try java.nio.file.Files.createFile(dir.resolve(batchId.toString))
-    catch { case _: java.nio.file.FileAlreadyExistsException => () }
   }
 
   /** Read a per-batch partitioned state table restricted to COMMITTED
@@ -738,13 +601,12 @@ object StreamNearDedup {
       runLiveAgainst(spark, path, paced, ckpt.toString, stateDir.toString,
         foldEvery = foldEvery)
       // A gate that promises a mid-stream fold must PROVE one ran:
-      // a fold leaves the MANIFEST generation pointer. Checked here,
-      // before the finally reclaims the state dir.
+      // a fold moves the MANIFEST generation pointer past 0. Checked
+      // here, before the finally reclaims the state dir.
       if (foldEvery > 0 && foldEvery < Dedup.PACED_BATCHES)
-        require(java.nio.file.Files.exists(
-            java.nio.file.Paths.get(stateDir.toString, "MANIFEST")),
-          s"foldEvery=$foldEvery run left no MANIFEST — the in-loop " +
-            "fold did not execute under the live engine")
+        require(Lsm.state(stateDir.toString, StateLayout).gen > 0,
+          s"foldEvery=$foldEvery run left no folded generation — the " +
+            "in-loop fold did not execute under the live engine")
       // The admitted table is a real parquet table in the CALLER's
       // session — no RDD re-base; localCheckpoint (eager) detaches
       // the rows from the state dir before it is reclaimed. The text
