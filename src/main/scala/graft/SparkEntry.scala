@@ -26,6 +26,24 @@ object SparkEntry {
 
   private lazy val all: Seq[QueryDef] = modules.flatMap(_.entries)
 
+  /** Worker threads for a main when `SPARK_GRAFT_CPUS` is unset. */
+  val DEFAULT_CPUS = "4"
+
+  /** The one local-mode session every main and the test suite run on:
+    * `local[cpus]`, [[GraftExtensions]], one shuffle partition per
+    * core, UTC, no UI, WARN logging. */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q6(spark, "/root/testdata/sf0.001")

@@ -145,7 +145,7 @@ object Pipeline extends QueryModule {
     * dedup_keep_best) materialize: the gate's global orderBy is a
     * range exchange whose partitioner SAMPLING pass executes the child
     * once and the sort executes it again — the corpus-wide regex
-    * tokenize TWICE per materialization (JobProbe: two back-to-back
+    * tokenize TWICE per materialization (Probe jobs: two back-to-back
     * ~0.5 s scan jobs) — for an order every one of those consumers
     * immediately discards (guide §2.4: an orderBy used only to make
     * output deterministic). */

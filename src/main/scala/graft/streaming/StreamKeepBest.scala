@@ -65,18 +65,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamKeepBest {
 
-  /** Empty band-key state: zero (band_idx, band_key, comp) rows. */
-  def emptyBands(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Int, Long, Long)].toDF("band_idx", "band_key", "comp")
-  }
-
-  /** Empty canonical state: zero (comp, doc_id, quality) rows. */
-  def emptyCanon(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Double)].toDF("comp", "doc_id", "quality")
-  }
-
   /** Empty event log in its PERSISTED shape (batch_id included — the
     * partition-discovery column of the `events/batch_id=K` layout). */
   private def emptyEvents(spark: SparkSession): DataFrame = {
@@ -85,8 +73,8 @@ object StreamKeepBest {
       .toDF("doc_id", "comp", "quality", "action", "batch_id")
   }
 
-  /** [[emptyBands]] in its PERSISTED shape (batch_id included) — the
-    * manifest-aware read's and the fold's schema anchor. */
+  /** Empty band-key state in its PERSISTED shape (batch_id included) —
+    * the manifest-aware read's and the fold's schema anchor. */
   private def emptyBandsPersisted(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Int, Long, Long, Long)]
@@ -379,18 +367,17 @@ object StreamKeepBest {
     def onBatch(batch0: DataFrame, batchId: Long): Unit = synchronized {
       // Job labels (guide §1.5): thread-local, covers every job this
       // trigger launches on the foreachBatch thread (the concurrent
-      // write futures label their own threads). Cleared on exit so the
-      // last trigger's label cannot leak onto unrelated later jobs
-      // from the same thread (r20 ADVICE).
-      def label(s: String): Unit =
-        spark.sparkContext.setJobDescription(s"keepbest b$batchId: $s")
-      label("trigger")
-      try onBatchLabeled(batch0, batchId, label)
-      finally spark.sparkContext.setJobDescription(null)
+      // write futures label their own threads). Every label is cleared
+      // on exit from its thread so it cannot leak onto unrelated later
+      // jobs from that thread.
+      StreamingOps.labeled(spark.sparkContext, label(batchId, "trigger"))(
+        onBatchLabeled(batch0, batchId))
     }
 
-    private def onBatchLabeled(batch0: DataFrame, batchId: Long,
-        label: String => Unit): Unit = {
+    private def label(batchId: Long, phase: String): String =
+      s"keepbest b$batchId: $phase"
+
+    private def onBatchLabeled(batch0: DataFrame, batchId: Long): Unit = {
       if (!committedIds(batchId)) {
         // Spread the one-file micro-batch before minhash/quality (the
         // [[StreamNearDedup.PersistentAccumulator.onBatch]] rationale:
@@ -405,7 +392,7 @@ object StreamKeepBest {
         val winners = try {
           // ckptProbe whenever PRIOR state exists (the
           // [[StreamNearDedup.PersistentAccumulator]] rationale).
-          label("probe+components")
+          spark.sparkContext.setJobDescription(label(batchId, "probe+components"))
           val (events0, _) = keepBestWithKeys(spark, batch, keys,
             bandsBase :: bandsTail, canonTail :+ canonBase,
             ckptProbe = committedIds.nonEmpty)
@@ -423,18 +410,20 @@ object StreamKeepBest {
           // coalesce(1): one batch's delta, sized like the first-touch
           // accumulator's — a production job sizes this to batch volume.
           val eventsWriteF = Future {
-            label("events write")
-            events.coalesce(1).write.mode("overwrite")
-              .parquet(s"$stateDir/events/batch_id=$batchId")
+            StreamingOps.labeled(spark.sparkContext, label(batchId, "events write")) {
+              events.coalesce(1).write.mode("overwrite")
+                .parquet(s"$stateDir/events/batch_id=$batchId")
+            }
           }
           val bandDelta = keys
             .join(events.filter(col("action") =!= "drop")
               .select(col("doc_id"), col("comp")), Seq("doc_id"))
             .select(col("band_idx"), col("band_key"), col("comp"))
           val bandWriteF = Future {
-            label("band delta write")
-            bandDelta.coalesce(1).write.mode("overwrite")
-              .parquet(s"$stateDir/bands/batch_id=$batchId")
+            StreamingOps.labeled(spark.sparkContext, label(batchId, "band delta write")) {
+              bandDelta.coalesce(1).write.mode("overwrite")
+                .parquet(s"$stateDir/bands/batch_id=$batchId")
+            }
           }
           StreamingOps.awaitAll(Seq(eventsWriteF, bandWriteF))
           events.unpersist(blocking = false)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule, Tables}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -357,9 +358,6 @@ object StreamingOps extends QueryModule {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         try q.awaitTermination() finally q.stop()
-        if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-          q.recentProgress.foreach(p => println(
-            s"DEBUG batch=${p.batchId} durs=${p.durationMs}"))
         val out = ss.table(name)
         (out.schema, out.collect().toSeq)
       } finally {
@@ -636,6 +634,15 @@ object StreamingOps extends QueryModule {
     // failure in submission order (sibling failures are dropped — the
     // first is the actionable one and the retry clobbers everything).
     outcomes.map(_.get)
+  }
+
+  /** Run `body` with `desc` as the Spark job description of the
+    * calling thread, and clear it on exit. Local properties are
+    * per-thread: a label set on a pooled future thread and never
+    * cleared would tag the next unrelated job that thread runs. */
+  private[graft] def labeled[A](sc: SparkContext, desc: String)(body: => A): A = {
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(null)
   }
 
   private[graft] def deleteRecursively(root: java.nio.file.Path): Unit = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe for the dedup family (round-9 judge item): every 100 TB
   * argument so far is a plan-SHAPE argument at sf0.1 — this main makes
   * it a MEASURED one. It generates an sf1-scale documents table (10×
@@ -59,15 +57,8 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(50000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", graft.SparkEntry.DEFAULT_CPUS)
+    val spark = graft.SparkEntry.localSession(cpus)
     import spark.implicits._
 
     val dir = graft.Scratch.dir("graft_sf1_probe_")

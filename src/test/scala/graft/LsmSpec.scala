@@ -165,12 +165,9 @@ class LsmSpec extends SparkSpecBase {
   }
 
   test("no program file but Lsm spells the protocol's file names") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: no $root")
-    val own = root.resolve("graft/storage/Lsm.scala")
+    val own = SourceTree.root.resolve("graft/storage/Lsm.scala")
     val literals = Seq("\"MANIFEST\"", "\"MANIFEST.tmp\"", "\"commits\"")
-    val offenders = scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != own).toList)
+    val offenders = SourceTree.files.filter(_ != own)
       .flatMap { p =>
         val text = Files.readString(p)
         literals.filter(text.contains).map(l => s"$p: $l")
